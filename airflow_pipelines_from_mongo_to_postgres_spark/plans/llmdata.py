@@ -515,11 +515,10 @@ FROM ranked WHERE rank <= 3
 """
 
 
-# --- q36: multimodal plumbing — opaque binary payload + typed metadata ------------------
+# --- q36: opaque binary payload + typed metadata ----------------------------------------
 def q36_binary_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal columns are opaque binary + metadata; decode is a stubbed
-    Pandas-UDF stage (operators/multimodal.py). The metadata path (size,
-    content hash, format tag) is real and oracle-checked here."""
+    """Per-document binary payload metadata: the UTF-8 payload's size in
+    bytes, its sha256 content hash and its media type tag."""
     d = load_table(spark, "documents", sf_dir)
     payload = F.encode(F.col("text"), "UTF-8")
     return d.select(

@@ -75,19 +75,12 @@ sys.path.insert(0, str(REPO))
 #: 23x (q154: count 0.10 s vs noop 2.28 s — the span-scrub compute never
 #: ran; q108: a left join to a distinct key set is ELIMINATED under
 #: count, so none of the dedup pair work was being timed; q01: the
-#: pricing sums were pruned, 5.7x). Set SPARK_GRAFT_BENCH_ACTION=count
-#: to reproduce the pre-r17 methodology. Committed records bridging the
-#: change: BENCH_FULL_r17_quiet.json is the last count-action record
-#: (old code); BENCH_FULL_r18_countaction.json is count-action on
-#: current code, next to the honest noop record BENCH_FULL_r18.json.
-_BENCH_ACTION = os.environ.get("SPARK_GRAFT_BENCH_ACTION", "noop")
-
-
+#: pricing sums were pruned, 5.7x). BENCH_FULL_r17_quiet.json is the
+#: last committed count-action record; count-action and noop records
+#: are not comparable.
 def _run_action(df) -> None:
-    if _BENCH_ACTION == "count":
-        df.count()
-    else:
-        df.write.format("noop").mode("overwrite").save()
+    df.write.format("noop").mode("overwrite").save()
+
 
 HEADLINE = [
     "q01_pricing_summary",

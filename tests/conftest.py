@@ -20,6 +20,6 @@ def spark():
     yield s
 
 
-@pytest.fixture()
+@pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"

@@ -7,6 +7,8 @@ slipping into a plan turns a pruned scan into a full scan)."""
 
 from __future__ import annotations
 
+import pytest
+
 from airflow_pipelines_from_mongo_to_postgres_spark.plans.relational import (
     q02_filter_project,
     q03_revenue_by_region,
@@ -148,7 +150,23 @@ def test_sequence_packing_partitions_on_bucket_only(spark, sf_dir):
     assert "SinglePartition" not in plan, plan
 
 
-def test_no_query_outputs_decimal_columns(spark, sf_dir):
+@pytest.fixture(scope="module")
+def registry_plans(spark, sf_dir):
+    """Every registered query built ONCE for the three registry-wide
+    sweeps below: name -> (output schema, executed-plan tree string).
+    Building and planning all plans is the sweeps' whole cost, so they
+    share one pass instead of rebuilding the registry each."""
+    import __spark_entry__ as entrymod
+
+    out = {}
+    for name, fn in entrymod.queries().items():
+        df = fn(spark, sf_dir)
+        out[name] = (df.schema,
+                     df._jdf.queryExecution().executedPlan().toString())
+    return out
+
+
+def test_no_query_outputs_decimal_columns(registry_plans):
     """Sweep ALL registered queries: no OUTPUT schema may contain a
     DecimalType anywhere (top-level, struct field, or array element).
     Driver-red class, proven in round 3: the only three hash failures in
@@ -158,8 +176,6 @@ def test_no_query_outputs_decimal_columns(spark, sf_dir):
     ORDER-INDEPENDENCE tool internally; the final projection must cast it
     to double on both engines."""
     from pyspark.sql import types as ST
-
-    import __spark_entry__ as entrymod
 
     def has_decimal(dt) -> bool:
         if isinstance(dt, ST.DecimalType):
@@ -172,12 +188,12 @@ def test_no_query_outputs_decimal_columns(spark, sf_dir):
             return has_decimal(dt.keyType) or has_decimal(dt.valueType)
         return False
 
-    offenders = [name for name, fn in entrymod.queries().items()
-                 if has_decimal(fn(spark, sf_dir).schema)]
+    offenders = [name for name, (schema, _) in registry_plans.items()
+                 if has_decimal(schema)]
     assert not offenders, f"decimal-typed output columns: {offenders}"
 
 
-def test_no_query_outputs_array_or_map_columns(spark, sf_dir):
+def test_no_query_outputs_array_or_map_columns(registry_plans):
     """Sweep ALL registered queries: no TOP-LEVEL output column may be
     ArrayType or MapType. Driver-red class, proven in round 11: q180's
     ``array<bigint>`` columns crashed the driver's pandas canonicalizer
@@ -187,12 +203,10 @@ def test_no_query_outputs_array_or_map_columns(spark, sf_dir):
     discipline as the DecimalType gate above."""
     from pyspark.sql import types as ST
 
-    import __spark_entry__ as entrymod
-
     offenders = [
         f"{name}.{f.name}: {f.dataType.simpleString()}"
-        for name, fn in entrymod.queries().items()
-        for f in fn(spark, sf_dir).schema.fields
+        for name, (schema, _) in registry_plans.items()
+        for f in schema.fields
         if isinstance(f.dataType, (ST.ArrayType, ST.MapType))
     ]
     assert not offenders, (
@@ -200,7 +214,7 @@ def test_no_query_outputs_array_or_map_columns(spark, sf_dir):
         f"cells — to_json them in the final projection): {offenders}")
 
 
-def test_no_query_windows_over_single_partition(spark, sf_dir):
+def test_no_query_windows_over_single_partition(registry_plans):
     """Sweep ALL registered queries: no Window operator may sit on a
     SinglePartition exchange — that shape pulls every row through one
     task's sort at scale. 1-row global aggregates (max/count singletons)
@@ -210,8 +224,6 @@ def test_no_query_windows_over_single_partition(spark, sf_dir):
     singleton crossJoins). q22 is allowlisted: its global row_number is
     the serial-PK scenario FIXTURE, documented in plans/mergeops.py."""
     import re
-
-    import __spark_entry__ as entrymod
 
     ALLOW = {
         # global row_number IS the serial-PK scenario fixture (mergeops.py)
@@ -245,8 +257,7 @@ def test_no_query_windows_over_single_partition(spark, sf_dir):
         "q225_mongo_string_key_window",
     }
     offenders, cartesian = [], []
-    for name, fn in entrymod.queries().items():
-        tree = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+    for name, (_, tree) in registry_plans.items():
         if "CartesianProduct" in tree:
             cartesian.append(name)
         if name in ALLOW:

@@ -176,62 +176,6 @@ def test_partition_tokens_are_exact_preimages(spark, n):
     assert [r.p for r in got] == list(range(n))
 
 
-@given(sizes=st.lists(st.sampled_from([8, 16, 24]), min_size=1, max_size=4),
-       tail=st.sampled_from([b"", b"\xff\xd8\xff\xe0junk", b"garbage"]))
-@settings(max_examples=10, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow,
-                                 HealthCheck.function_scoped_fixture])
-def test_mjpeg_span_walk_recovers_every_frame(sizes, tail):
-    """mjpeg_frame_spans over arbitrary concatenations of real JPEGs
-    (+ corrupt tails): spans == the exact encoder output boundaries —
-    entropy bytes that LOOK like markers never split a frame, corrupt
-    tails never produce a bogus span."""
-    import numpy as np
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.operators.multimodal import (
-        mjpeg_frame_spans,
-    )
-    from tests.test_multimodal import _jpeg_encode
-
-    rng = np.random.RandomState(sum(sizes))
-    jpegs = [_jpeg_encode(rng.randint(0, 255, (s, s, 3)).astype("uint8"))
-             for s in sizes]
-    stream = b"".join(jpegs) + tail
-    spans = mjpeg_frame_spans(stream)
-    assert [e - s for s, e in spans] == [len(j) for j in jpegs]
-
-
-@given(data=st.binary(min_size=0, max_size=400),
-       stamp=st.sampled_from([b"", b"\x89PNG\r\n\x1a\n", b"BM", b"\xff\xd8",
-                              b"GIF89a", b"RIFF", b"RIFFxxxxWAVE",
-                              b"RIFFxxxxAVI "]))
-@settings(max_examples=200, deadline=None,
-          suppress_health_check=[HealthCheck.too_slow])
-def test_binary_parsers_never_crash_outside_contract(data, stamp):
-    """Hostile-payload fuzz: every binary parser either returns a result
-    or raises an exception its Spark-stage wrapper catches
-    (NotImplementedError / ValueError / OSError / zlib / struct /
-    IndexError / KeyError-free) — random bytes, with and without
-    magic-number prefixes, must never kill an executor task."""
-    import struct
-    import zlib
-
-    from airflow_pipelines_from_mongo_to_postgres_spark.operators import multimodal as M
-
-    payload = stamp + data
-    allowed = (NotImplementedError, ValueError, OSError, zlib.error,
-               IndexError, struct.error)
-    for fn in (M.decode_image, M.decode_audio,
-               lambda p: M.gif_frames(p) if p[:4] == b"GIF8" else None,
-               M.avi_movi_frames, M.mjpeg_frame_spans,
-               lambda p: M.extract_video_frames(p, 3),
-               lambda p: M.resize_pixels(p, 4, 4)):
-        try:
-            fn(payload)
-        except allowed:
-            pass
-
-
 _MQL_FIELDS = ["a", "b", "arr", "nest.x"]
 _mql_stage = st.one_of(
     st.builds(lambda f, v: {"$match": {f.split(".")[0]: v}},
